@@ -36,18 +36,10 @@ object Bench {
     // fresh JVM). Clearing between queries (never between a query's own
     // iterations) keeps each measurement independent; the disk-backed
     // artifacts (IVF/PQ index dirs) are untouched.
-    // SPARK_GRAFT_BENCH_WARM=1 keeps the cache across iterations — the
-    // adjudication knob that reproduces the pre-round-11 query-major
-    // warm-state reading (operators' internal .cache() hits carry
-    // over), so a cold-vs-warm delta can be attributed to cache
-    // policy rather than an operator regression. Never set by the
-    // driver; cold (cleared) is the honest default.
-    val keepWarm = sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("1")
-    def clearState(): Unit = if (!keepWarm) spark.catalog.clearCache()
 
     // warm-up (also surfaces failures before any timing)
     val ok = qs.filter { case (name, fn) =>
-      try { time(fn); clearState(); true }
+      try { time(fn); spark.catalog.clearCache(); true }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
     }
@@ -67,7 +59,7 @@ object Bench {
     // stall-robust; query-major median was not.
     val passTimes: Seq[Map[String, Double]] = (1 to iters).map { _ =>
       ok.map { case (name, fn) =>
-        val t = time(fn); clearState(); name -> t
+        val t = time(fn); spark.catalog.clearCache(); name -> t
       }.toMap
     }
     val raw = ok.map { case (name, _) =>

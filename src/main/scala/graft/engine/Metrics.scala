@@ -17,7 +17,6 @@ object Metrics extends Logging {
   case class FlowStats(rows: Long, batches: Long, lastRowsPerSec: Double)
 
   private val stats = new ConcurrentHashMap[String, FlowStats]()
-  @volatile private var registered = false
 
   final class Listener extends StreamingQueryListener {
     override def onQueryStarted(
@@ -44,12 +43,13 @@ object Metrics extends Logging {
         e.exception.map(x => s" (error: $x)").getOrElse(""))
   }
 
-  /** Idempotently attach the listener to a session. */
+  /** Idempotently attach the listener to a session. Listeners are per
+    * session (each has its own StreamingQueryManager), so the check is
+    * against this session's listeners, not a JVM-wide flag.
+    */
   def register(spark: SparkSession): Unit = synchronized {
-    if (!registered) {
+    if (!spark.streams.listListeners().exists(_.isInstanceOf[Listener]))
       spark.streams.addListener(new Listener)
-      registered = true
-    }
   }
 
   def snapshot: Map[String, FlowStats] = {

@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale (Pregel-on-DataFrames): the edge list is attached to the loop
   * once, hash-partitioned on `src` and pinned, so each round moves
-  * only the |V|-row label relation. A round is one equi-join plus TWO
-  * map-side-combinable aggregations — count per (node, label), then
-  * argmin_{(-count, label)} per node via `min(struct(...))` — no
-  * window, no sort: the per-node winner reduces inside the shuffle
-  * exactly like a MIN. Lineage is cut per round through
+  * only the |V|-row label relation. A round after the first is one
+  * equi-join plus TWO map-side-combinable aggregations; round 1 skips
+  * the join, as every label starts as its node's id and the votes are
+  * a projection of the pinned edge list. The aggregations are count
+  * per (node, label), then argmin_{(-count, label)} per node via
+  * `min(struct(...))` — no window, no sort: the per-node winner
+  * reduces inside the shuffle exactly like a MIN. Lineage is cut per round through
   * [[graft.engine.Checkpoints]] with the previous round's blocks
   * released eagerly ([[PageRank]]'s measured-best pattern).
   *

@@ -16,9 +16,13 @@ import org.apache.spark.sql.functions._
   * `0.15·SCALE + (85 · Σ contribs) div 100`, all in BIGINT.
   *
   * Scale (Pregel-on-DataFrames): the edge list is the only large
-  * relation; each iteration is one equi-join (ranks ⋈ edges on src —
-  * both sides hash-partitioned on the same key, so AQE reuses the
-  * exchange) plus one map-side-combinable groupBy on dst. Lineage is
+  * relation; each iteration after the first is one equi-join (ranks ⋈
+  * edges on src — both sides hash-partitioned on the same key, so AQE
+  * reuses the exchange) plus one map-side-combinable groupBy on dst.
+  * Round 1 is not a join: its contributions are a projection of the
+  * pinned edge list, since the initial ranks are known constants
+  * (uniform in [[run]] and [[runDangling]]; [[personalized]] takes the
+  * source's out-edges only). Lineage is
   * cut every iteration through [[graft.engine.Checkpoints]] —
   * `localCheckpoint` by default, or a reliable `checkpoint()` when
   * `graft.checkpoint.dir` is set (the form a long iterative job on a

@@ -36,14 +36,17 @@ object Relax {
     * @param dist0    (node: long, dd: long) seed distances
     *                 (Long.MaxValue = unreached). PRECONDITION: every
     *                 edge target `v` must appear in dist0 — the round
-    *                 refreshes dist via a LEFT join, so a relaxation
-    *                 onto a node absent from dist0 is silently
-    *                 dropped (the inlined union+groupBy shape would
-    *                 have grown the node set instead). All current
-    *                 call sites seed dist0 with the full node universe
-    *                 of a symmetric graph, which satisfies this; an
+    *                 refreshes dist via a LEFT join, which would drop a
+    *                 relaxation onto a node absent from dist0 (the
+    *                 inlined union+groupBy shape would have grown the
+    *                 node set instead). Each round counts its
+    *                 candidates and the ones the join matched, in the
+    *                 round's own job, and throws
+    *                 IllegalArgumentException when they differ. A seed
+    *                 over the node universe of a symmetric graph
+    *                 (every current call site) satisfies it; an
     *                 asymmetric edge list whose targets include
-    *                 non-sources does NOT.
+    *                 non-sources does not.
     * @param iterations max relaxation rounds (the declared fixed
     *                 count — early exit only ever SKIPS identity
     *                 rounds).
@@ -64,17 +67,33 @@ object Relax {
         .filter(col("dd") =!= Long.MaxValue)
         .select(col("v").as("_rn"), step.as("_rd"))
         .groupBy(col("_rn")).agg(min(col("_rd")).as("_rd"))
+      // the PRECONDITION guard: candidates the LEFT join cannot match
+      // are relaxations onto nodes absent from dist0
+      val cand = new org.apache.spark.sql.Observation(
+        s"relax_cand_${i}_${System.nanoTime()}")
       val obs = new org.apache.spark.sql.Observation(
         s"relax_round_${i}_${System.nanoTime()}")
       val next = graft.engine.Checkpoints.cut(dist
-        .join(relMin, col("node") === col("_rn"), "left")
-        .observe(obs, sum(when(col("_rd") < col("dd"), 1L)
-          .otherwise(0L)).as("changed"))
+        .join(relMin.observe(cand, count(lit(1)).as("n")),
+          col("node") === col("_rn"), "left")
+        .observe(obs,
+          sum(when(col("_rd") < col("dd"), 1L).otherwise(0L)).as("changed"),
+          count(col("_rd")).as("matched"))
         .select(col("node"),
           least(col("dd"), coalesce(col("_rd"), col("dd"))).as("dd")))
       graft.engine.Checkpoints.release(dist)
       dist = next
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      val m = obs.get
+      // no count at all when AQE prunes an empty candidate side
+      val dropped = cand.get.getOrElse("n", 0L).asInstanceOf[Long] -
+        m("matched").asInstanceOf[Long]
+      if (dropped > 0L) {
+        graft.engine.Checkpoints.release(next)
+        throw new IllegalArgumentException(s"Relax.rounds: round ${i + 1} " +
+          s"relaxes $dropped node(s) missing from dist0; seed every node " +
+          "of the graph")
+      }
+      converged = m("changed").asInstanceOf[Long] == 0L
       i += 1
     }
     dist

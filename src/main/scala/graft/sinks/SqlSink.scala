@@ -1,9 +1,9 @@
 package graft.sinks
 
-import java.sql.DriverManager
+import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PathExtract
@@ -127,27 +127,34 @@ object SqlSink extends Logging {
   }
 
   /** One JDBC batch per partition (the executemany analog). */
-  def writeJdbc(url: String, positionalSql: String, params: DataFrame): Unit = {
-    val n = params.columns.length
-    params.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+  def writeJdbc(url: String, positionalSql: String, params: DataFrame): Unit =
+    params.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
         val conn = DriverManager.getConnection(url)
         try {
           conn.setAutoCommit(false)
-          val st = conn.prepareStatement(positionalSql)
-          rows.foreach { r =>
-            var i = 0
-            while (i < n) {
-              st.setObject(i + 1, r.get(i)); i += 1
-            }
-            st.addBatch()
-          }
-          st.executeBatch()
+          bindAndExecute(conn, positionalSql, rows)
           conn.commit()
         } finally conn.close()
       }
     }
+
+  /** Binds every row to `sql`'s positional parameters as one JDBC batch
+    * (`addBatch` per row) and executes it; the caller owns the commit.
+    */
+  private def bindAndExecute(conn: Connection, sql: String,
+      rows: Iterator[Row]): Unit = {
+    val st = conn.prepareStatement(sql)
+    rows.foreach { r =>
+      var i = 0
+      while (i < r.length) { st.setObject(i + 1, r.get(i)); i += 1 }
+      st.addBatch()
+    }
+    st.executeBatch(): Unit
   }
+
+  /** Hash partitions of an idempotent batch, hence of its markers. */
+  private val SinkPartitions = 16
 
   /** Marker table for idempotent replay detection. */
   val MarkerTable = "graft_committed"
@@ -182,7 +189,7 @@ object SqlSink extends Logging {
     * shuffle confs are not restart-stable), under which a surviving
     * marker would silently drop a *different* row subset — so the
     * batch is hash-repartitioned on every bind column into a fixed
-    * `sinkPartitions` count, making pid a pure function of row values.
+    * [[SinkPartitions]] count, making pid a pure function of row values.
     *
     * Error contract (deliberately different from the R14 sink above):
     * a failed batch RETHROWS, failing the micro-batch so the checkpoint
@@ -191,21 +198,19 @@ object SqlSink extends Logging {
     * dead-lettered upstream (Flows' corrupt-JSON split), not here.
     */
   def idempotentForeachBatch(url: String, query: String, mapping: Mapping,
-      flowId: String, jsonCol: Option[String] = None,
-      sinkPartitions: Int = 16): (DataFrame, Long) => Unit = {
+      flowId: String, jsonCol: Option[String] = None): (DataFrame, Long) => Unit = {
     val (positional, paramOrder) = compile(query)
     ensureMarkerTable(url)
     (batch: DataFrame, batchId: Long) => {
       val mapped = mapParameters(batch, mapping, paramOrder, jsonCol)
-      val params = mapped.repartition(sinkPartitions, mapped.columns.map(col): _*)
-      val n = params.columns.length
+      val params = mapped.repartition(SinkPartitions, mapped.columns.map(col): _*)
       try {
         // Dataset.foreachPartition (not .rdd) so the action carries a SQL
         // execution id — upstream observe() metrics (Flows' one-pass
         // corrupt/content-type counts) are delivered off this same job.
         // The partition id is still the deterministic hash-partition
         // index, read off the task context.
-        params.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+        params.foreachPartition { (rows: Iterator[Row]) =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
           if (rows.nonEmpty) {
             val conn = DriverManager.getConnection(url)
@@ -231,13 +236,7 @@ object SqlSink extends Logging {
                   }
                 if (committed) {
                   try {
-                    val st = conn.prepareStatement(positional)
-                    rows.foreach { r =>
-                      var i = 0
-                      while (i < n) { st.setObject(i + 1, r.get(i)); i += 1 }
-                      st.addBatch()
-                    }
-                    st.executeBatch()
+                    bindAndExecute(conn, positional, rows)
                     conn.commit() // rows + marker atomically
                   } catch {
                     // roll back the open txn (marker + partial rows)

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardOpenOption}
 import java.util.Base64
+import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -178,4 +179,56 @@ final class ExchangeLog(name: String, walDir: Option[Path],
     walFile.foreach(Files.deleteIfExists(_))
     commitFile.foreach(Files.deleteIfExists(_))
   }
+}
+
+/** Named [[ExchangeLog]]s plus the kwargs of each exchange's first
+  * declare — the registry behind [[MemoryBroker]], [[BrokerServer]]
+  * and [[graft.sources.amqp.AmqpServer]].
+  *
+  * Declare mirrors the reference's `exchange_declare(**kwargs)`
+  * passthrough (reference amqp.py:55-78): the first declare's kwargs
+  * win, like the reference's signal cache, and `durable=false` creates
+  * the exchange WITHOUT a WAL even when `walDir` is set. Exchanges
+  * used before any declare are created with `walDir`, which is read
+  * at creation time.
+  */
+final class ExchangeRegistry(walDir: => Option[Path]) {
+  private val logs = new ConcurrentHashMap[String, ExchangeLog]()
+  private val declaredKwargs = new ConcurrentHashMap[String, Map[String, String]]()
+
+  def log(name: String): ExchangeLog =
+    logs.computeIfAbsent(name, n => new ExchangeLog(n, walDir))
+
+  def declare(name: String, kwargs: Map[String, String]): Unit = {
+    declaredKwargs.putIfAbsent(name, kwargs)
+    val dir = if (kwargs.get("durable").exists(_.equalsIgnoreCase("false")))
+      None else walDir
+    logs.computeIfAbsent(name, n => new ExchangeLog(n, dir)): Unit
+  }
+
+  /** Kwargs recorded by the first [[declare]] (empty if none). */
+  def declared(name: String): Map[String, String] =
+    declaredKwargs.getOrDefault(name, Map.empty)
+
+  /** Has the exchange been declared or used? */
+  def exists(name: String): Boolean =
+    logs.containsKey(name) || declaredKwargs.containsKey(name)
+
+  /** Destroy an exchange: its kwargs, in-memory log and on-disk WAL. */
+  def delete(name: String): Unit = {
+    declaredKwargs.remove(name)
+    Option(logs.remove(name)).foreach(_.purge())
+  }
+
+  /** Un-acked messages summed over every exchange. */
+  def backlog: Long = {
+    var t = 0L
+    logs.forEach((_, lg) => t += lg.latest - lg.committed)
+    t
+  }
+
+  /** Drop the in-memory logs and keep the recorded kwargs: with a WAL
+    * the logs recover from disk on next use (a broker restart).
+    */
+  def dropLogs(): Unit = logs.clear()
 }

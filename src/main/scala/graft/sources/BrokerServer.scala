@@ -5,7 +5,6 @@ import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Path
 import java.util.Base64
-import java.util.concurrent.ConcurrentHashMap
 
 /** Standalone message-broker server: [[ExchangeLog]]s behind a
   * line-oriented TCP protocol, so the broker runs as its own process —
@@ -42,8 +41,7 @@ import java.util.concurrent.ConcurrentHashMap
   * survives a server-process restart ([[ExchangeLog]] recovery).
   */
 final class BrokerServer(port: Int, walDir: Option[Path]) {
-  private val exchanges = new ConcurrentHashMap[String, ExchangeLog]()
-  private val declaredKwargs = new ConcurrentHashMap[String, Map[String, String]]()
+  private val exchanges = new ExchangeRegistry(walDir)
   private val server = new ServerSocket(port)
   @volatile private var running = true
 
@@ -58,16 +56,6 @@ final class BrokerServer(port: Int, walDir: Option[Path]) {
   def connectionsPeak: Long = peakCount.get
 
   def boundPort: Int = server.getLocalPort
-
-  private def log(name: String): ExchangeLog =
-    exchanges.computeIfAbsent(name, n => new ExchangeLog(n, walDir))
-
-  private def declare(name: String, kwargs: Map[String, String]): Unit = {
-    declaredKwargs.putIfAbsent(name, kwargs)
-    val dir = if (kwargs.get("durable").exists(_.equalsIgnoreCase("false")))
-      None else walDir
-    exchanges.computeIfAbsent(name, n => new ExchangeLog(n, dir)): Unit
-  }
 
   private def b64d(s: String) = new String(Base64.getDecoder.decode(s), UTF_8)
 
@@ -108,9 +96,9 @@ final class BrokerServer(port: Int, walDir: Option[Path]) {
 
   private def handle(parts: Array[String], out: PrintWriter): Unit = parts(0) match {
     case "PUB" =>
-      out.println(s"OK ${log(parts(1)).publish(b64d(parts(3)), b64d(parts(2)))}")
+      out.println(s"OK ${exchanges.log(parts(1)).publish(b64d(parts(3)), b64d(parts(2)))}")
     case "SLICE" =>
-      val msgs = log(parts(1)).slice(parts(2).toLong, parts(3).toLong)
+      val msgs = exchanges.log(parts(1)).slice(parts(2).toLong, parts(3).toLong)
       out.println(s"OK ${msgs.length}")
       val enc = Base64.getEncoder
       msgs.foreach { m =>
@@ -118,21 +106,21 @@ final class BrokerServer(port: Int, walDir: Option[Path]) {
           s"${enc.encodeToString(m.contentType.getBytes(UTF_8))} " +
           s"${enc.encodeToString(m.body.getBytes(UTF_8))}")
       }
-    case "LATEST"    => out.println(s"OK ${log(parts(1)).latest}")
-    case "COMMITTED" => out.println(s"OK ${log(parts(1)).committed}")
-    case "ACK"       => log(parts(1)).ack(parts(2).toLong); out.println("OK")
-    case "NACK"      => log(parts(1)).nack(); out.println("OK")
-    case "NACKCOUNT" => out.println(s"OK ${log(parts(1)).nackCount}")
+    case "LATEST"    => out.println(s"OK ${exchanges.log(parts(1)).latest}")
+    case "COMMITTED" => out.println(s"OK ${exchanges.log(parts(1)).committed}")
+    case "ACK"       => exchanges.log(parts(1)).ack(parts(2).toLong); out.println("OK")
+    case "NACK"      => exchanges.log(parts(1)).nack(); out.println("OK")
+    case "NACKCOUNT" => out.println(s"OK ${exchanges.log(parts(1)).nackCount}")
     case "DECLARE" =>
       val kwargs = parts.drop(2).map { kv =>
         val i = kv.indexOf('=')
         kv.substring(0, i) -> b64d(kv.substring(i + 1))
       }.toMap
-      declare(parts(1), kwargs)
+      exchanges.declare(parts(1), kwargs)
       out.println("OK")
     case "DECLARED" =>
       val enc = Base64.getEncoder
-      val kv = declaredKwargs.getOrDefault(parts(1), Map.empty)
+      val kv = exchanges.declared(parts(1))
         .map { case (k, v) => s"$k=${enc.encodeToString(v.getBytes(UTF_8))}" }
       out.println(("OK" +: kv.toSeq.sorted).mkString(" "))
     case "PING"      => out.println("OK")

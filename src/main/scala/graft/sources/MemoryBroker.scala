@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** In-JVM broker registry with AMQP-shaped semantics (named exchanges,
   * publish, consume) over [[ExchangeLog]]s — the local-mode / test
   * transport. The cross-process transport with identical semantics is
@@ -9,8 +7,8 @@ import java.util.concurrent.ConcurrentHashMap
   * [[BrokerLog]] contract either way.
   */
 object MemoryBroker {
-  private val exchanges = new ConcurrentHashMap[String, ExchangeLog]()
   @volatile private var walDir: Option[java.nio.file.Path] = None
+  private val registry = new ExchangeRegistry(walDir)
 
   /** Enable file-backed WAL durability for exchanges created after this
     * call: publishes append to `<dir>/<exchange>.wal`, acks persist the
@@ -23,27 +21,16 @@ object MemoryBroker {
   }
   def disablePersistence(): Unit = walDir = None
 
-  def exchange(name: String): ExchangeLog =
-    exchanges.computeIfAbsent(name, n => new ExchangeLog(n, walDir))
+  def exchange(name: String): ExchangeLog = registry.log(name)
 
-  private val declaredKwargs =
-    new ConcurrentHashMap[String, Map[String, String]]()
-
-  /** Exchange-declare kwargs passthrough (reference amqp.py:55-78):
-    * kwargs are recorded; `durable=false` creates the exchange without
-    * a WAL even when persistence is enabled. Idempotent like the
-    * reference's signal cache.
+  /** Exchange-declare kwargs passthrough (reference amqp.py:55-78), see
+    * [[ExchangeRegistry.declare]].
     */
-  def declare(name: String, kwargs: Map[String, String]): Unit = {
-    declaredKwargs.putIfAbsent(name, kwargs)
-    val dir = if (kwargs.get("durable").exists(_.equalsIgnoreCase("false")))
-      None else walDir
-    exchanges.computeIfAbsent(name, n => new ExchangeLog(n, dir)): Unit
-  }
+  def declare(name: String, kwargs: Map[String, String]): Unit =
+    registry.declare(name, kwargs)
 
   /** Kwargs recorded by a prior [[declare]] (empty if none). */
-  def declared(name: String): Map[String, String] =
-    declaredKwargs.getOrDefault(name, Map.empty)
+  def declared(name: String): Map[String, String] = registry.declared(name)
 
   def publish(exchangeName: String, msg: String,
       contentType: String = "application/json"): Long =
@@ -52,5 +39,5 @@ object MemoryBroker {
   /** Drops in-memory state (exchanges re-created lazily — with WAL
     * enabled they recover from disk, simulating a broker restart).
     */
-  def reset(): Unit = exchanges.clear()
+  def reset(): Unit = registry.dropLogs()
 }

@@ -5,7 +5,7 @@ import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.file.Path
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.sources.ExchangeLog
+import graft.sources.ExchangeRegistry
 
 import Amqp._
 
@@ -52,8 +52,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
     vhosts: Set[String] = Set("/"),
     sslContext: Option[javax.net.ssl.SSLContext] = None,
     needClientAuth: Boolean = false) {
-  private val exchanges = new ConcurrentHashMap[String, ExchangeLog]()
-  private val declaredKwargs = new ConcurrentHashMap[String, Map[String, String]]()
+  private val exchanges = new ExchangeRegistry(walDir)
   private val bindings = new ConcurrentHashMap[String, String]() // queue -> exchange
   // live consumer count per exchange — the lifecycle signal for
   // auto_delete (this broker's queues are 1:1 shadows of exchanges, so
@@ -85,21 +84,10 @@ final class AmqpServer(port: Int, walDir: Option[Path],
 
   /** Kwargs recorded by the first declare of an exchange (tests). */
   def declared(exchange: String): Map[String, String] =
-    declaredKwargs.getOrDefault(exchange, Map.empty)
-
-  private def log(name: String): ExchangeLog =
-    exchanges.computeIfAbsent(name, n => new ExchangeLog(n, walDir))
-
-  private def declare(name: String, kwargs: Map[String, String]): Unit = {
-    declaredKwargs.putIfAbsent(name, kwargs)
-    val dir = if (kwargs.get("durable").exists(_.equalsIgnoreCase("false")))
-      None else walDir
-    exchanges.computeIfAbsent(name, n => new ExchangeLog(n, dir)): Unit
-  }
+    exchanges.declared(exchange)
 
   private def declaredBit(exchange: String, bit: String): Boolean =
-    declaredKwargs.getOrDefault(exchange, Map.empty)
-      .get(bit).exists(_.equalsIgnoreCase("true"))
+    exchanges.declared(exchange).get(bit).exists(_.equalsIgnoreCase("true"))
 
   /** auto_delete teardown: when the LAST consumer of an auto_delete
     * exchange goes away, the exchange is destroyed — in-memory log,
@@ -111,8 +99,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
     if (counter != null && counter.decrementAndGet() <= 0 &&
         declaredBit(exchange, "auto_delete")) {
       consumerCounts.remove(exchange)
-      declaredKwargs.remove(exchange)
-      Option(exchanges.remove(exchange)).foreach(_.purge())
+      exchanges.delete(exchange)
     }
   }
 
@@ -160,18 +147,12 @@ final class AmqpServer(port: Int, walDir: Option[Path],
     recheckWatermark()
   }
 
-  private def totalBacklog: Long = {
-    var t = 0L
-    exchanges.forEach((_, lg) => t += lg.latest - lg.committed)
-    t
-  }
-
   private def recheckWatermark(): Unit =
     if (backlogWatermark != Long.MaxValue) {
-      if (totalBacklog > backlogWatermark && blockedReason.isEmpty)
+      if (exchanges.backlog > backlogWatermark && blockedReason.isEmpty)
         setBlocked(Some(
           "low on memory: message backlog over the watermark"))
-      else if (totalBacklog <= backlogWatermark && blockedReason.isDefined)
+      else if (exchanges.backlog <= backlogWatermark && blockedReason.isDefined)
         setBlocked(None)
     }
 
@@ -406,7 +387,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
               bodyFrames(channel, body, frameMax)
             send(frames: _*)
           } else {
-            log(pub.exchange).publish(
+            exchanges.log(pub.exchange).publish(
               new String(body, java.nio.charset.StandardCharsets.UTF_8),
               hdr.contentType.getOrElse("application/json"))
             recheckWatermark()
@@ -432,8 +413,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
         if (d.passive) {
           // passive declare asserts existence without creating: the
           // spec answer for a missing exchange is a 404 channel close
-          if (exchanges.containsKey(d.exchange) ||
-              declaredKwargs.containsKey(d.exchange)) {
+          if (exchanges.exists(d.exchange)) {
             if (!d.noWait) send(methodFrame(channel, ExchangeDeclareOk()))
           } else closeChannel(channel,
             404, s"NOT_FOUND - no exchange '${d.exchange}' in vhost '$connVhost'",
@@ -446,12 +426,12 @@ final class AmqpServer(port: Int, walDir: Option[Path],
           val kwargs =
             Map("durable" -> d.durable.toString, "exchange_type" -> d.tpe) ++
               bits ++ d.arguments.map { case (k, v) => k -> String.valueOf(v) }
-          declare(d.exchange, kwargs)
+          exchanges.declare(d.exchange, kwargs)
           if (!d.noWait) send(methodFrame(channel, ExchangeDeclareOk()))
         }
 
       case q: QueueDeclare =>
-        val lg = log(exchangeFor(q.queue))
+        val lg = exchanges.log(exchangeFor(q.queue))
         val backlog = (lg.latest - lg.committed).toInt
         if (!q.noWait)
           send(methodFrame(channel, QueueDeclareOk(q.queue, backlog, 0)))
@@ -490,7 +470,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
         val st = channels.get(channel)
         require(st != null, s"basic.ack on unopened channel $channel")
         // tags are offsets + 1, so multiple-ack == prefix truncation
-        val lg = log(ackExchange(channel))
+        val lg = exchanges.log(ackExchange(channel))
         if (a.multiple) lg.ack(a.deliveryTag)
         else st.singleAcked.synchronized {
           st.singleAcked.add(a.deliveryTag - 1)
@@ -512,7 +492,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
           // requeue=false = discard: advances the consume watermark
           // exactly like an ack (the reference's nack-bad-JSON path,
           // amqp.py:107-109, wants the message gone, not redelivered)
-          val lg = log(ackExchange(channel))
+          val lg = exchanges.log(ackExchange(channel))
           if (n.multiple) lg.ack(n.deliveryTag)
           else st.singleAcked.synchronized {
             st.singleAcked.add(n.deliveryTag - 1)
@@ -561,7 +541,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
       if (consumedExchanges.add(exchange))
         consumerCounts.computeIfAbsent(exchange,
           _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
-      val lg = log(exchange)
+      val lg = exchanges.log(exchange)
       val pump = new Thread(() => {
         var nextOff = lg.committed
         try {

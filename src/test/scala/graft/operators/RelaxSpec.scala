@@ -62,21 +62,41 @@ class RelaxSpec extends SparkSpec {
     assert(got.filter(_._1 >= 10L).forall(_._2 == Long.MaxValue))
   }
 
-  test("PRECONDITION counter-example: a target absent from dist0 is dropped") {
+  test("no reached node: an empty candidate set still converges") {
+    // every candidate count must arrive even when the round relaxes
+    // nothing (an empty side the planner could prune)
+    val (e0, dist0) = graph()
+    val unreached = dist0.select(col("node"),
+      when(col("node") === -1L, 0L).otherwise(lit(Long.MaxValue)).as("dd"))
+    for (weighted <- Seq(false, true))
+      assert(rows(Relax.rounds(e0, unreached, 3, weighted)) == rows(unreached))
+  }
+
+  test("PRECONDITION: a relaxation onto a node absent from dist0 fails loudly") {
     // rounds() refreshes dist via a LEFT join, so it can only ever
-    // UPDATE nodes already present in dist0 — the documented 'every
-    // edge target must appear in dist0' precondition. On an ASYMMETRIC
-    // edge list whose target never appears as a source, the inlined
-    // union+groupBy reference GROWS the node set while rounds() does
-    // not: this pin makes the divergence explicit rather than silent.
-    val e0 = Seq((1L, 2L)).toDF("u", "v").withColumn("w", lit(1L))
-    val dist0 = Seq((1L, 0L)).toDF("node", "dd") // node 2 NOT seeded
-    val got = rows(Relax.rounds(e0, dist0, 2, weighted = false))
-    val want = rows(reference(e0, dist0, 2, weighted = false))
-    assert(got == Seq((1L, 0L)), "relaxation onto unseeded node 2 is dropped")
-    assert(want == Seq((1L, 0L), (2L, 1L)), "the reference would grow the set")
+    // UPDATE nodes already present in dist0; on an ASYMMETRIC edge list
+    // the inlined union+groupBy reference would GROW the node set
+    // instead. Node 3 is first reached in round 2; node 4 is never
+    // reached (its only source 5 is unreached), so it drops nothing.
+    val e0 = Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("u", "v")
+      .withColumn("w", lit(1L))
+    val dist0 = Seq((1L, 0L), (2L, Long.MaxValue), (5L, Long.MaxValue))
+      .toDF("node", "dd") // nodes 3 and 4 NOT seeded
+    // the count holds whether the candidates are broadcast or shuffled
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    try for (threshold <- Seq(prev, "-1"); weighted <- Seq(false, true)) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val err = intercept[IllegalArgumentException](
+        Relax.rounds(e0, dist0, 2, weighted))
+      assert(err.getMessage.contains(
+        "round 2 relaxes 1 node(s) missing from dist0"), err.getMessage)
+      // one round relaxes only node 2: nothing is dropped yet
+      assert(rows(Relax.rounds(e0, dist0, 1, weighted)) ==
+        rows(reference(e0, dist0, 1, weighted)))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     // seeding the full node universe restores equivalence
-    val distFull = Seq((1L, 0L), (2L, Long.MaxValue)).toDF("node", "dd")
+    val distFull = dist0.union(Seq((3L, Long.MaxValue), (4L, Long.MaxValue))
+      .toDF("node", "dd"))
     assert(rows(Relax.rounds(e0, distFull, 2, weighted = false)) ==
       rows(reference(e0, distFull, 2, weighted = false)))
   }
